@@ -2,19 +2,40 @@
 
 Spark has no built-in graph operator set (GraphX is RDD/Scala-only,
 GraphFrames is an external package), but the DataFrame expression of
-the classic algorithms is exactly joins + aggregations in a loop —
-connected components already lives in operators/dedup.py
-(neardup_clusters); this module adds PageRank.
+the classic algorithms is exactly joins + aggregations in a loop.
+Connected components lives in operators/dedup.py (neardup_clusters).
+
+Every query here runs on one of two graphs, each defined once for the
+builders and once for the DuckDB oracles:
+
+* the supplier↔part co-supply graph — undirected, bipartite, from the
+  distinct lineitem (supplier, part) pairs, node ids ``2·suppkey`` and
+  ``2·partkey + 1`` (``_contrib_edges`` / ``_SUPPLY_SQL``), ranked by
+  graph_pagerank and graph_personalized_pagerank;
+* the co-purchase item graph — parts bought together in ≥2 orders,
+  each undirected edge stored once as ``(lo, hi)`` with lo < hi
+  (``_copurchase_edges`` / ``_COPURCHASE_SQL``, which ``_EDGES_SQL``
+  and ``_DEG_SQL`` extend with the symmetrised edges and the degrees),
+  behind triangles, degrees, label propagation, k-core, BFS,
+  modularity and Adamic-Adar.
+
+Min-label propagation is one superstep loop (``_label_propagation``)
+with one unrolled oracle (``_LP_SQL``), shared by
+graph_label_propagation and graph_modularity.
 
 Determinism contract: ranks are kept in integer fixed-point (1e12
 units) with floor division, so every engine computes bit-identical
 ranks — a double-based PageRank accumulates sums in different orders
 on different engines/partitionings and the last bits diverge, which
-would make an exact oracle impossible. The DuckDB oracle unrolls the
-same iterations as chained CTEs.
+would make an exact oracle impossible. The DuckDB oracles unroll the
+same iterations as chained CTEs (standard SQL forbids GROUP BY in a
+recursive term, so recursion can't express per-iteration
+re-aggregation — unrolling can).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,16 +47,178 @@ R_UNIT = 1_000_000_000_000  # 1.0 of rank mass, in fixed-point units
 N_ITER = 10
 TOP_K = 50
 CHECKPOINT_EVERY = 5  # truncate iterative lineage every N supersteps
+LP_ITER = 5
+LP_CHECKPOINT_EVERY = 2
+
+
+def _contrib_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The supplier↔part graph as ONE persisted contribution table
+    ``(src, dst, d)`` — both directions of every distinct pair, with
+    the out-degree of ``src`` — pre-partitioned by ``src`` so a rank
+    superstep's join never re-exchanges the edge side. The caller
+    materializes it (its first action) and unpersists it."""
+    pairs = (
+        load(spark, sf_dir).lineitem.select(
+            (F.col("l_suppkey") * 2).alias("s"),
+            (F.col("l_partkey") * 2 + 1).alias("p"),
+        )
+        .distinct()
+    )
+    edges = pairs.select(
+        F.col("s").alias("src"), F.col("p").alias("dst")
+    ).unionAll(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    return (
+        edges.join(deg, "src")
+        # explicit partition count: an AQE-coalesced cached partitioning
+        # would be whatever the tiny local run lands on and the loop
+        # join could no longer rely on it; defaultParallelism scales
+        # with the session, never a constant tuned to one machine
+        .repartition(spark.sparkContext.defaultParallelism, "src")
+        .persist()
+    )
+
+
+def _spread(contrib_edges: DataFrame, ranks: DataFrame) -> DataFrame:
+    """One rank superstep's damped spread ``(node, spread)``: every node
+    sends ``rank div d`` along each out-edge, and a receiving node keeps
+    85% of its incoming sum, in integer fixed point."""
+    return (
+        contrib_edges.join(ranks, F.col("src") == F.col("node"))
+        .select("dst", F.expr("rank div d").alias("contrib"))
+        .groupBy("dst")
+        .agg(F.expr("(85 * sum(contrib)) div 100").alias("spread"))
+        .select(F.col("dst").alias("node"), "spread")
+    )
+
+
+_SUPPLY_SQL = """
+    pairs AS (
+      SELECT DISTINCT l_suppkey * 2 AS s, l_partkey * 2 + 1 AS p FROM lineitem
+    ),
+    edges AS MATERIALIZED (
+      SELECT s AS src, p AS dst FROM pairs
+      UNION ALL
+      SELECT p AS src, s AS dst FROM pairs
+    ),
+    deg AS MATERIALIZED (SELECT src, count(*) AS d FROM edges GROUP BY src)"""
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Co-purchase edges ``(lo, hi)``, lo < hi: pairs of parts bought
+    together in ≥2 orders. Unstaged — each caller checkpoints it where
+    its own plan reads it more than once."""
+    baskets = load(spark, sf_dir).lineitem.select(
+        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
+    ).distinct()
+    a = baskets.alias("a")
+    b = baskets.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.basket") == F.col("b.basket"))
+            & (F.col("a.item") < F.col("b.item")),
+        )
+        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+        .filter(F.col("n_ab") >= 2)
+        .select("lo", "hi")
+    )
+
+
+def _directed(e: DataFrame) -> DataFrame:
+    """Both directions ``(src, dst)`` of every undirected edge."""
+    return e.select(F.col("lo").alias("src"), F.col("hi").alias("dst")).unionAll(
+        e.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
+    )
+
+
+def _node_degrees(e: DataFrame) -> DataFrame:
+    """``(node, d)``: the degree of every node of the edge list ``e``."""
+    return (
+        e.select(F.col("lo").alias("node"))
+        .unionAll(e.select(F.col("hi").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+_COPURCHASE_SQL = """
+    baskets AS (
+      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
+    ),
+    e0 AS MATERIALIZED (
+      SELECT a.item AS lo, b.item AS hi
+      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
+      GROUP BY 1, 2
+      HAVING count(*) >= 2
+    )"""
+# DuckDB evaluates every MATERIALIZED CTE, referenced or not, so each
+# oracle takes the shortest prefix it needs
+_EDGES_SQL = _COPURCHASE_SQL + """,
+    edges AS MATERIALIZED (
+      SELECT lo AS src, hi AS dst FROM e0
+      UNION ALL
+      SELECT hi AS src, lo AS dst FROM e0
+    )"""
+_DEG_SQL = _EDGES_SQL + """,
+    deg AS MATERIALIZED (
+      SELECT src AS node, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY src
+    )"""
+
+
+def _label_propagation(edges: DataFrame) -> DataFrame:
+    """``(node, label)`` after LP_ITER synchronized min-label supersteps
+    over the directed ``edges``: every node starts labeled with its own
+    id and adopts the minimum label among itself and its neighbors.
+    Each superstep is one edges⋈labels join + one min-aggregation (the
+    Pregel message pattern); the node-sized label vector is
+    localCheckpoint-ed every LP_CHECKPOINT_EVERY supersteps so lineage
+    stays bounded (swap for reliable checkpoint() on a cluster)."""
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").cast("long").alias("label")
+    )
+    for it in range(LP_ITER):
+        nbr_min = (
+            edges.join(
+                labels.select(
+                    F.col("node").alias("dst"), F.col("label").alias("nl")
+                ),
+                "dst",
+            )
+            .groupBy("src")
+            .agg(F.min("nl").alias("nbr"))
+        )
+        labels = labels.join(nbr_min, labels.node == nbr_min.src).select(
+            "node", F.least("label", "nbr").alias("label")
+        )
+        if (it + 1) % LP_CHECKPOINT_EVERY == 0 and (it + 1) < LP_ITER:
+            labels = labels.localCheckpoint(eager=False)
+    return labels
+
+
+# the same supersteps unrolled over the oracle's `edges`; l{LP_ITER}
+# holds the final labels
+_LP_SQL = """l0 AS MATERIALIZED (
+      SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS label FROM edges
+    ),
+    """ + ",\n    ".join(
+    f"""l{i + 1} AS MATERIALIZED (
+      SELECT l.node AS node,
+             CAST(least(l.label, min(nl.label)) AS BIGINT) AS label
+      FROM l{i} l
+      JOIN edges e ON e.src = l.node
+      JOIN l{i} nl ON nl.node = e.dst
+      GROUP BY l.node, l.label
+    )"""
+    for i in range(LP_ITER)
+)
 
 
 def _pagerank_oracle() -> str:
-    """Unroll the integer power iteration as chained CTEs (standard SQL
-    forbids GROUP BY in a recursive term, so recursion can't express
-    per-iteration re-aggregation — unrolling can)."""
-    steps = []
-    for i in range(N_ITER):
-        steps.append(
-            f"""r{i + 1} AS MATERIALIZED (
+    """Unroll the integer power iteration as chained CTEs."""
+    unrolled = ",\n    ".join(
+        f"""r{i + 1} AS MATERIALIZED (
       SELECT e.dst AS node,
              CAST(base.b + (85 * CAST(sum(r{i}.rank // deg.d) AS BIGINT)) // 100
                   AS BIGINT) AS rank
@@ -45,18 +228,10 @@ def _pagerank_oracle() -> str:
       CROSS JOIN base
       GROUP BY e.dst, base.b
     )"""
-        )
-    unrolled = ",\n    ".join(steps)
+        for i in range(N_ITER)
+    )
     return f"""
-    WITH pairs AS (
-      SELECT DISTINCT l_suppkey * 2 AS s, l_partkey * 2 + 1 AS p FROM lineitem
-    ),
-    edges AS MATERIALIZED (
-      SELECT s AS src, p AS dst FROM pairs
-      UNION ALL
-      SELECT p AS src, s AS dst FROM pairs
-    ),
-    deg AS MATERIALIZED (SELECT src, count(*) AS d FROM edges GROUP BY src),
+    WITH {_SUPPLY_SQL},
     nn AS (SELECT count(*) AS n FROM deg),
     base AS (SELECT CAST((15 * ({R_UNIT} // n)) // 100 AS BIGINT) AS b FROM nn),
     r0 AS (SELECT src AS node,
@@ -108,27 +283,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine bit-identical — see module docstring; the scalar teleport
     constants use the same non-negative floor division in Python.
     """
-    li = load(spark, sf_dir).lineitem
-    pairs = (
-        li.select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("s").alias("src"), F.col("p").alias("dst")
-    ).unionAll(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    contrib_edges = (
-        edges.join(deg, "src")
-        # explicit partition count: an AQE-coalesced cached partitioning
-        # would be whatever the tiny local run lands on and the loop
-        # join could no longer rely on it; defaultParallelism scales
-        # with the session, never a constant tuned to this box
-        .repartition(spark.sparkContext.defaultParallelism, "src")
-        .persist()
-    )
+    contrib_edges = _contrib_edges(spark, sf_dir)
     # loop-invariant teleport scalars; the count also materializes the
     # cache so every superstep reads the pre-partitioned table
     n = contrib_edges.select("src").distinct().count()
@@ -140,17 +295,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(r0).cast("long").alias("rank"))
     )
     for it in range(N_ITER):
-        ranks = (
-            contrib_edges.join(ranks, F.col("src") == F.col("node"))
-            .select(
-                "dst", F.expr("rank div d").alias("contrib")
-            )
-            .groupBy("dst")
-            .agg(F.expr("85 * sum(contrib) div 100").alias("part_rank"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(base_add) + F.col("part_rank")).alias("rank"),
-            )
+        ranks = _spread(contrib_edges, ranks).select(
+            "node", (F.lit(base_add) + F.col("spread")).alias("rank")
         )
         if (it + 1) % CHECKPOINT_EVERY == 0 and (it + 1) < N_ITER:
             # lazy: the plan is truncated immediately (LogicalRDD leaf)
@@ -175,26 +321,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_triangle_count",
-    oracle="""
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-    ),
-    e AS (
-      SELECT a.item AS lo, b.item AS hi
-      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING count(*) >= 2
-    ),
+    oracle=f"""
+    WITH {_DEG_SQL},
     tri AS (
       SELECT CAST(count(*) AS BIGINT) AS n_triangles
-      FROM e e1
-      JOIN e e2 ON e2.lo = e1.hi
-      JOIN e e3 ON e3.lo = e1.lo AND e3.hi = e2.hi
-    ),
-    deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
-        SELECT lo AS node FROM e UNION ALL SELECT hi FROM e
-      ) GROUP BY node
+      FROM e0 e1
+      JOIN e0 e2 ON e2.lo = e1.hi
+      JOIN e0 e3 ON e3.lo = e1.lo AND e3.hi = e2.hi
     ),
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS n_nodes,
@@ -202,7 +335,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM deg
     )
     SELECT n_nodes,
-           (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_edges,
+           (SELECT CAST(count(*) AS BIGINT) FROM e0) AS n_edges,
            n_triangles,
            n_wedges,
            CASE WHEN n_wedges > 0
@@ -226,25 +359,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-orientation if hub skew appears). Wedges come from the integer
     degree table; transitivity = 3Δ/wedges is one final exact-ratio
     division."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-        # edge table feeds three joins + the degree agg; materialize once
-        .localCheckpoint(eager=True)
-    )
+    # edge table feeds three joins + the degree agg; materialize once
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     e1 = e.select(F.col("lo").alias("a_"), F.col("hi").alias("b_"))
     e2 = e.select(F.col("lo").alias("b_"), F.col("hi").alias("c_"))
     e3 = e.select(F.col("lo").alias("a_"), F.col("hi").alias("c_"))
@@ -253,13 +369,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e3, ["a_", "c_"], "left_semi")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    deg = (
-        e.select(F.col("lo").alias("node"))
-        .unionAll(e.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    agg = deg.agg(
+    agg = _node_degrees(e).agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("n_wedges"),
     )
@@ -277,21 +387,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degree_distribution",
-    oracle="""
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-    ),
-    e AS (
-      SELECT a.item AS lo, b.item AS hi
-      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING count(*) >= 2
-    ),
-    deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
-        SELECT lo AS node FROM e UNION ALL SELECT hi FROM e
-      ) GROUP BY node
-    )
+    oracle=f"""
+    WITH {_DEG_SQL}
     SELECT d AS degree,
            CAST(count(*) AS BIGINT) AS n_nodes,
            round(ln(CAST(d AS DOUBLE)), 6) AS log_degree,
@@ -308,31 +405,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub-splitting (degree-ordered orientation, salting) before its
     joins. Two hash-aggs over the edge list; the distribution is
     degree-cardinality, tiny at any scale."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-    )
-    deg = (
-        e.select(F.col("lo").alias("node"))
-        .unionAll(e.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
     return (
-        deg.groupBy(F.col("d").alias("degree"))
+        _node_degrees(_copurchase_edges(spark, sf_dir))
+        .groupBy(F.col("d").alias("degree"))
         .agg(F.count(F.lit(1)).alias("n_nodes"))
         .select(
             "degree",
@@ -344,46 +419,11 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LP_ITER = 5
-LP_CHECKPOINT_EVERY = 2
-
-
-def _label_prop_oracle() -> str:
-    """Unroll the synchronized min-label iterations as chained CTEs
-    (same reason as the PageRank oracle: recursive SQL can't
-    re-aggregate per iteration)."""
-    steps = []
-    for i in range(LP_ITER):
-        steps.append(
-            f"""l{i + 1} AS MATERIALIZED (
-      SELECT l.node AS node,
-             CAST(least(l.label, min(nl.label)) AS BIGINT) AS label
-      FROM l{i} l
-      JOIN edges e ON e.src = l.node
-      JOIN l{i} nl ON nl.node = e.dst
-      GROUP BY l.node, l.label
-    )"""
-        )
-    unrolled = ",\n    ".join(steps)
-    return f"""
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-    ),
-    e0 AS (
-      SELECT a.item AS lo, b.item AS hi
-      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING count(*) >= 2
-    ),
-    edges AS MATERIALIZED (
-      SELECT lo AS src, hi AS dst FROM e0
-      UNION ALL
-      SELECT hi AS src, lo AS dst FROM e0
-    ),
-    l0 AS MATERIALIZED (
-      SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS label FROM edges
-    ),
-    {unrolled},
+@register(
+    "graph_label_propagation",
+    oracle=f"""
+    WITH {_EDGES_SQL},
+    {_LP_SQL},
     comm AS (
       SELECT label, CAST(count(*) AS BIGINT) AS community_size
       FROM l{LP_ITER} GROUP BY label
@@ -392,12 +432,7 @@ def _label_prop_oracle() -> str:
            CAST(count(*) AS BIGINT) AS n_communities,
            CAST(sum(community_size) AS BIGINT) AS n_nodes
     FROM comm GROUP BY community_size ORDER BY community_size
-    """
-
-
-@register(
-    "graph_label_propagation",
-    oracle=_label_prop_oracle(),
+    """,
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronized min-label propagation on the
@@ -410,57 +445,13 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, unlike frequency-based LPA whose ties need RNG —
     which is what makes an exact cross-engine oracle possible.
 
-    Iterative DataFrame shape, like graph_pagerank: each superstep is
-    one edges⋈labels join + one min-aggregation (the Pregel message
-    pattern); the label vector is node-sized and localCheckpoint-ed
-    every LP_CHECKPOINT_EVERY supersteps so lineage stays bounded (swap
-    for reliable checkpoint() on a cluster). The output is the
-    community-size distribution — bounded by the largest community, not
-    by graph size."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-    )
-    edges = (
-        e0.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionAll(e0.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        # every superstep joins against the edge list; materialize once
-        .localCheckpoint(eager=True)
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").cast("long").alias("label")
-    )
-    for it in range(LP_ITER):
-        nbr_min = (
-            edges.join(
-                labels.select(
-                    F.col("node").alias("dst"), F.col("label").alias("nl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nl").alias("nbr"))
-        )
-        labels = (
-            labels.join(nbr_min, labels.node == nbr_min.src)
-            .select("node", F.least("label", "nbr").alias("label"))
-        )
-        if (it + 1) % LP_CHECKPOINT_EVERY == 0 and (it + 1) < LP_ITER:
-            labels = labels.localCheckpoint(eager=False)
-    comm = labels.groupBy("label").agg(
+    Iterative DataFrame shape, like graph_pagerank: the supersteps are
+    ``_label_propagation``'s Pregel joins over the staged edge list.
+    The output is the community-size distribution — bounded by the
+    largest community, not by graph size."""
+    # every superstep joins against the edge list; materialize once
+    edges = _directed(_copurchase_edges(spark, sf_dir)).localCheckpoint(eager=True)
+    comm = _label_propagation(edges).groupBy("label").agg(
         F.count(F.lit(1)).alias("community_size")
     )
     return (
@@ -479,11 +470,9 @@ KCORE_PEELS = 4
 
 def _kcore_oracle() -> str:
     """Unroll the fixed peeling rounds as chained CTEs (each round
-    re-aggregates degrees — same recursion limitation as PageRank)."""
-    steps = []
-    for i in range(KCORE_PEELS):
-        steps.append(
-            f"""d{i} AS MATERIALIZED (
+    re-aggregates degrees)."""
+    unrolled = ",\n    ".join(
+        f"""d{i} AS MATERIALIZED (
       SELECT node, count(*) AS d FROM (
         SELECT lo AS node FROM e{i} UNION ALL SELECT hi FROM e{i}
       ) GROUP BY node
@@ -499,19 +488,11 @@ def _kcore_oracle() -> str:
              (SELECT CAST(count(*) AS BIGINT) FROM k{i}) AS n_nodes,
              (SELECT CAST(count(*) AS BIGINT) FROM e{i + 1}) AS n_edges
     )"""
-        )
-    unrolled = ",\n    ".join(steps)
+        for i in range(KCORE_PEELS)
+    )
     final = " UNION ALL ".join(f"SELECT * FROM s{i}" for i in range(KCORE_PEELS))
     return f"""
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-    ),
-    e0 AS MATERIALIZED (
-      SELECT a.item AS lo, b.item AS hi
-      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING count(*) >= 2
-    ),
+    WITH {_COPURCHASE_SQL},
     {unrolled}
     SELECT peel, n_nodes, n_edges FROM ({final}) ORDER BY peel
     """
@@ -536,33 +517,10 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization on the driver), edge table localCheckpoint-ed per
     round so lineage stays O(1) per round — the graph_pagerank contract
     applied to a shrinking edge set."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-        .localCheckpoint(eager=True)
-    )
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     rows = []
     for i in range(KCORE_PEELS):
-        deg = (
-            e.select(F.col("lo").alias("node"))
-            .unionAll(e.select(F.col("hi").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= KCORE_K).select("node")
+        keep = _node_degrees(e).filter(F.col("d") >= KCORE_K).select("node")
         e = (
             e.join(keep.withColumnRenamed("node", "lo"), "lo", "left_semi")
             .join(keep.withColumnRenamed("node", "hi"), "hi", "left_semi")
@@ -582,10 +540,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(i + 1).alias("peel"), "n_nodes", "n_edges"
             )
         )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out.orderBy("peel")
+    return reduce(DataFrame.unionAll, rows).orderBy("peel")
 
 
 BFS_LAYERS = 4
@@ -594,10 +549,8 @@ BFS_LAYERS = 4
 def _bfs_oracle() -> str:
     """Unrolled BFS rounds (MATERIALIZED — each layer is referenced by
     the next frontier, the visited union, and its stats row)."""
-    steps = []
-    for i in range(BFS_LAYERS):
-        steps.append(
-            f"""l{i + 1} AS MATERIALIZED (
+    unrolled = ",\n    ".join(
+        f"""l{i + 1} AS MATERIALIZED (
       SELECT DISTINCT e.dst AS node
       FROM l{i} f JOIN edges e ON e.src = f.node
       WHERE e.dst NOT IN (SELECT node FROM v{i})
@@ -605,30 +558,16 @@ def _bfs_oracle() -> str:
     v{i + 1} AS MATERIALIZED (
       SELECT node FROM v{i} UNION SELECT node FROM l{i + 1}
     )"""
-        )
-    unrolled = ",\n    ".join(steps)
+        for i in range(BFS_LAYERS)
+    )
     final = " UNION ALL ".join(
         f"SELECT {i} AS layer, (SELECT CAST(count(*) AS BIGINT) FROM l{i}) AS n_nodes"
         for i in range(BFS_LAYERS + 1)
     )
     return f"""
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-    ),
-    e0 AS MATERIALIZED (
-      SELECT a.item AS lo, b.item AS hi
-      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING count(*) >= 2
-    ),
-    edges AS MATERIALIZED (
-      SELECT lo AS src, hi AS dst FROM e0
-      UNION ALL
-      SELECT hi AS src, lo AS dst FROM e0
-    ),
-    deg AS MATERIALIZED (SELECT src, count(*) AS d FROM edges GROUP BY src),
+    WITH {_DEG_SQL},
     l0 AS MATERIALIZED (
-      SELECT src AS node FROM deg ORDER BY d DESC, src LIMIT 1
+      SELECT node FROM deg ORDER BY d DESC, node LIMIT 1
     ),
     v0 AS MATERIALIZED (SELECT node FROM l0),
     {unrolled}
@@ -654,28 +593,7 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     round; visited is node-bounded, frontiers shrink as the graph
     saturates. The oracle unrolls the same rounds with MATERIALIZED
     CTEs (each layer feeds three consumers)."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-    )
-    edges = (
-        e0.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionAll(e0.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = _directed(_copurchase_edges(spark, sf_dir)).localCheckpoint(eager=True)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     root = (
         deg.orderBy(F.col("d").desc(), F.col("src"))
@@ -709,10 +627,7 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(i + 1).alias("layer"), "n_nodes"
             )
         )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out.orderBy("layer")
+    return reduce(DataFrame.unionAll, rows).orderBy("layer")
 
 
 N_ITER_PPR = 5
@@ -725,10 +640,8 @@ def _ppr_oracle() -> str:
     contribution aggregate FULL OUTER JOINed with the seed teleport
     mass, so nodes reached only by teleport (the seeds) and nodes
     reached only by spread both survive — the sparse-vector walk."""
-    steps = []
-    for i in range(N_ITER_PPR):
-        steps.append(
-            f"""c{i + 1} AS MATERIALIZED (
+    unrolled = ",\n    ".join(
+        f"""c{i + 1} AS MATERIALIZED (
       SELECT e.dst AS node,
              (85 * CAST(sum(r{i}.rank // deg.d) AS BIGINT)) // 100 AS spread
       FROM r{i}
@@ -741,18 +654,10 @@ def _ppr_oracle() -> str:
              CAST(coalesce(c.spread, 0) + coalesce(s.b, 0) AS BIGINT) AS rank
       FROM c{i + 1} c FULL OUTER JOIN seed_base s ON s.node = c.node
     )"""
-        )
-    unrolled = ",\n    ".join(steps)
+        for i in range(N_ITER_PPR)
+    )
     return f"""
-    WITH pairs AS (
-      SELECT DISTINCT l_suppkey * 2 AS s, l_partkey * 2 + 1 AS p FROM lineitem
-    ),
-    edges AS MATERIALIZED (
-      SELECT s AS src, p AS dst FROM pairs
-      UNION ALL
-      SELECT p AS src, s AS dst FROM pairs
-    ),
-    deg AS MATERIALIZED (SELECT src, count(*) AS d FROM edges GROUP BY src),
+    WITH {_SUPPLY_SQL},
     seeds AS (SELECT DISTINCT src AS node FROM deg
               WHERE src % 2 = 0 AND src // 2 <= {N_SEEDS}),
     ns AS (SELECT count(*) AS n FROM seeds),
@@ -798,23 +703,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-partitioned by src replaces the separate edges/deg caches, and
     the seed count + teleport constants are computed once as scalars
     instead of a per-iteration 1-row crossJoin broadcast."""
-    li = load(spark, sf_dir).lineitem
-    pairs = (
-        li.select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("s").alias("src"), F.col("p").alias("dst")
-    ).unionAll(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    contrib_edges = (
-        edges.join(deg, "src")
-        .repartition(spark.sparkContext.defaultParallelism, "src")
-        .persist()
-    )
+    contrib_edges = _contrib_edges(spark, sf_dir)
     seeds = (
         contrib_edges.filter(
             (F.col("src") % 2 == 0) & (F.expr("src div 2") <= N_SEEDS)
@@ -832,15 +721,9 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed_base = seeds.select("node", F.lit(b).cast("long").alias("b"))
     ranks = seeds.select("node", F.lit(r0).cast("long").alias("rank"))
     for it in range(N_ITER_PPR):
-        spread = (
-            contrib_edges.join(ranks, F.col("src") == F.col("node"))
-            .select("dst", F.expr("rank div d").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.expr("(85 * sum(contrib)) div 100").alias("spread"))
-            .select(F.col("dst").alias("node"), "spread")
-        )
         ranks = (
-            spread.join(seed_base, "node", "full_outer")
+            _spread(contrib_edges, ranks)
+            .join(seed_base, "node", "full_outer")
             .select(
                 "node",
                 (
@@ -863,44 +746,13 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _modularity_oracle() -> str:
-    """Label-propagation unroll (same steps as _label_prop_oracle) plus
-    the exact-integer Newman modularity: Q = Σ_c(4m·L_c − D_c²)/(4m²),
-    where every numerator term is a BIGINT."""
-    steps = []
-    for i in range(LP_ITER):
-        steps.append(
-            f"""l{i + 1} AS MATERIALIZED (
-      SELECT l.node AS node,
-             CAST(least(l.label, min(nl.label)) AS BIGINT) AS label
-      FROM l{i} l
-      JOIN edges e ON e.src = l.node
-      JOIN l{i} nl ON nl.node = e.dst
-      GROUP BY l.node, l.label
-    )"""
-        )
-    unrolled = ",\n    ".join(steps)
-    return f"""
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-    ),
-    e0 AS MATERIALIZED (
-      SELECT a.item AS lo, b.item AS hi
-      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING count(*) >= 2
-    ),
-    edges AS MATERIALIZED (
-      SELECT lo AS src, hi AS dst FROM e0
-      UNION ALL
-      SELECT hi AS src, lo AS dst FROM e0
-    ),
-    l0 AS MATERIALIZED (
-      SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS label FROM edges
-    ),
-    {unrolled},
-    deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
-            FROM edges GROUP BY src),
+@register(
+    "graph_modularity",
+    # exact-integer Newman modularity Q = Σ_c(4m·L_c − D_c²)/(4m²) over
+    # the label-propagation communities; every numerator term a BIGINT
+    oracle=f"""
+    WITH {_DEG_SQL},
+    {_LP_SQL},
     mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e0),
     lc AS (
       SELECT a.label, CAST(count(*) AS BIGINT) AS l_in
@@ -925,12 +777,7 @@ def _modularity_oracle() -> str:
     SELECT mm.m AS n_edges, qn.n_communities, qn.intra_edges, qn.q_num,
            round(qn.q_num / (4.0 * mm.m * mm.m), 6) AS modularity
     FROM qn CROSS JOIN mm
-    """
-
-
-@register(
-    "graph_modularity",
-    oracle=_modularity_oracle(),
+    """,
 )
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity Q of the min-label-propagation communities on
@@ -947,50 +794,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel joins as graph_label_propagation; modularity itself adds
     one edge-keyed membership join (L_c) and one node-keyed degree
     rollup (D_c), both label-keyed aggregates after."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-        # read three times: edges union, m count, intra-edge join
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        e0.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionAll(e0.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").cast("long").alias("label")
-    )
-    for it in range(LP_ITER):
-        nbr_min = (
-            edges.join(
-                labels.select(
-                    F.col("node").alias("dst"), F.col("label").alias("nl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nl").alias("nbr"))
-        )
-        labels = labels.join(nbr_min, labels.node == nbr_min.src).select(
-            "node", F.least("label", "nbr").alias("label")
-        )
-        if (it + 1) % LP_CHECKPOINT_EVERY == 0 and (it + 1) < LP_ITER:
-            labels = labels.localCheckpoint(eager=False)
-    labels = labels.localCheckpoint(eager=True)  # read 2x below
+    # read three times: edges union, m count, intra-edge join
+    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _directed(e0).localCheckpoint(eager=True)
+    labels = _label_propagation(edges).localCheckpoint(eager=True)  # read 2x below
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
@@ -1036,28 +843,24 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "adamic_adar_link_prediction",
-    oracle="""
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-    ),
-    e AS (
-      SELECT a.item AS lo, b.item AS hi
-      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING count(*) >= 2
-    ),
-    sym AS (SELECT lo AS a, hi AS b FROM e UNION ALL SELECT hi, lo FROM e),
-    deg AS (SELECT a AS node, CAST(count(*) AS BIGINT) AS d
-            FROM sym GROUP BY 1),
+AA_DEG_CAP = 8  # hub cap: wedges route only through common neighbors
+#                 with deg(z) <= CAP — the 100 TB wedge-blowup control
+
+
+def _adamic_adar_oracle(cap: int | None) -> str:
+    """Top-20 Adamic-Adar non-edges; with ``cap``, wedges count only
+    through common neighbors of degree <= cap (plus a deg_cap column)."""
+    cap_filter = f" AND d <= {cap}" if cap else ""
+    cap_col = f",\n           CAST({cap} AS INT) AS deg_cap" if cap else ""
+    return f"""
+    WITH {_DEG_SQL},
     iw AS (SELECT node,
                   CAST(floor(1000000.0 / ln(d) + 0.001) AS BIGINT)
                     AS inv_micro
-           FROM deg WHERE d >= 2),
+           FROM deg WHERE d >= 2{cap_filter}),
     wedge AS (
-      SELECT s1.b AS lo, s2.b AS hi, s1.a AS z
-      FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b
+      SELECT s1.dst AS lo, s2.dst AS hi, s1.src AS z
+      FROM edges s1 JOIN edges s2 ON s1.src = s2.src AND s1.dst < s2.dst
     ),
     cand AS (
       SELECT wedge.lo, wedge.hi,
@@ -1067,11 +870,65 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY 1, 2
     )
     SELECT c.lo AS item_a, c.hi AS item_b, c.n_common, c.aa_micro,
-           round(c.aa_micro / 1000000.0, 6) AS aa_score
-    FROM cand c LEFT JOIN e ON e.lo = c.lo AND e.hi = c.hi
-    WHERE e.lo IS NULL
+           round(c.aa_micro / 1000000.0, 6) AS aa_score{cap_col}
+    FROM cand c LEFT JOIN e0 ON e0.lo = c.lo AND e0.hi = c.hi
+    WHERE e0.lo IS NULL
     ORDER BY c.aa_micro DESC, c.lo, c.hi LIMIT 20
-    """,
+    """
+
+
+def _adamic_adar_inputs(
+    spark: SparkSession, sf_dir: str, cap: int | None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(e, sym, iw)``: the staged edge table, its directed form
+    ``(src, dst)``, and the exact 1/ln(deg) weight ``(node, inv_micro)``
+    of every node of degree >= 2 (and <= ``cap`` when given)."""
+    # narrow staged edge table (2 longs/row, catalog-pair-sized — the
+    # grid_lof staged-model-table precedent): sym/deg/wedge/anti-join
+    # otherwise re-derive the basket self-join 7x
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    sym = _directed(e)
+    deg = sym.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).cast("long").alias("d")
+    )
+    keep = F.col("d") >= 2
+    if cap:
+        keep = keep & (F.col("d") <= cap)
+    iw = deg.filter(keep).select(
+        "node",
+        F.expr("CAST(floor(1000000.0 / ln(d) + 0.001) AS BIGINT)").alias(
+            "inv_micro"
+        ),
+    )
+    return e, sym, iw
+
+
+def _adamic_adar_top(cand: DataFrame, e: DataFrame, *extra) -> DataFrame:
+    """Drop existing edges from the scored ``cand`` pairs by anti-join
+    (never materializing the non-edge complement) and keep the top 20."""
+    ex = e.select(F.col("lo").alias("elo"), F.col("hi").alias("ehi"))
+    return (
+        cand.join(
+            ex,
+            (F.col("lo") == F.col("elo")) & (F.col("hi") == F.col("ehi")),
+            "left_anti",
+        )
+        .select(
+            F.col("lo").alias("item_a"),
+            F.col("hi").alias("item_b"),
+            "n_common",
+            "aa_micro",
+            F.round(F.col("aa_micro") / 1_000_000.0, 6).alias("aa_score"),
+            *extra,
+        )
+        .orderBy(F.col("aa_micro").desc(), "item_a", "item_b")
+        .limit(20)
+    )
+
+
+@register(
+    "adamic_adar_link_prediction",
+    oracle=_adamic_adar_oracle(None),
 )
 def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic-Adar link prediction (Adamic & Adar 2003; the classic
@@ -1094,40 +951,7 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-d by weight) before the wedge join, the same mitigation the
     triangle count documents. Existing edges are removed by an
     anti-join, never materializing the non-edge complement."""
-    t = load(spark, sf_dir)
-    baskets = t.lineitem.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    b2 = baskets.select(
-        F.col("basket").alias("basket2"), F.col("item").alias("item2")
-    )
-    e = (
-        baskets.join(
-            b2,
-            (F.col("basket") == F.col("basket2"))
-            & (F.col("item") < F.col("item2")),
-        )
-        .groupBy(F.col("item").alias("lo"), F.col("item2").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_cobuys"))
-        .filter(F.col("n_cobuys") >= 2)
-        .select("lo", "hi")
-        # narrow staged edge table (2 longs/row, catalog-pair-sized —
-        # the grid_lof staged-model-table precedent): sym/deg/wedge/
-        # anti-join otherwise re-derive the basket self-join 7x
-        .localCheckpoint(eager=True)
-    )
-    sym = e.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionAll(
-        e.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("d")
-    )
-    iw = deg.filter(F.col("d") >= 2).select(
-        "node",
-        F.expr("CAST(floor(1000000.0 / ln(d) + 0.001) AS BIGINT)").alias(
-            "inv_micro"
-        ),
-    )
+    e, sym, iw = _adamic_adar_inputs(spark, sf_dir, None)
     # r13: the 1/ln(deg) weight joins the EDGE-sized sym table (one
     # row per directed edge) BEFORE the wedge self-join, so the
     # wedge-sized intermediate — sum over z of C(deg(z), 2) rows, the
@@ -1137,10 +961,10 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # common-neighbor pair contributes to every z's score, so unlike
     # triangle counting no degree orientation can prune wedges — the
     # deg-capped twin below is the 100 TB mitigation.)
-    s1 = sym.join(iw, F.col("node") == F.col("a")).select(
-        F.col("a").alias("z"), F.col("b").alias("lo"), "inv_micro"
+    s1 = sym.join(iw, F.col("node") == F.col("src")).select(
+        F.col("src").alias("z"), F.col("dst").alias("lo"), "inv_micro"
     )
-    s2 = sym.select(F.col("a").alias("z2"), F.col("b").alias("hi"))
+    s2 = sym.select(F.col("src").alias("z2"), F.col("dst").alias("hi"))
     wedge = s1.join(
         s2, (F.col("z") == F.col("z2")) & (F.col("lo") < F.col("hi"))
     )
@@ -1148,66 +972,12 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_common"),
         F.sum("inv_micro").cast("long").alias("aa_micro"),
     )
-    ex = e.select(F.col("lo").alias("elo"), F.col("hi").alias("ehi"))
-    return (
-        cand.join(
-            ex,
-            (F.col("lo") == F.col("elo")) & (F.col("hi") == F.col("ehi")),
-            "left_anti",
-        )
-        .select(
-            F.col("lo").alias("item_a"),
-            F.col("hi").alias("item_b"),
-            "n_common",
-            "aa_micro",
-            F.round(F.col("aa_micro") / 1_000_000.0, 6).alias("aa_score"),
-        )
-        .orderBy(F.col("aa_micro").desc(), "item_a", "item_b")
-        .limit(20)
-    )
-
-
-AA_DEG_CAP = 8  # hub cap: wedges route only through common neighbors
-#                 with deg(z) <= CAP — the 100 TB wedge-blowup control
+    return _adamic_adar_top(cand, e)
 
 
 @register(
     "adamic_adar_capped",
-    oracle=f"""
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-    ),
-    e AS (
-      SELECT a.item AS lo, b.item AS hi
-      FROM baskets a JOIN baskets b ON a.basket = b.basket AND a.item < b.item
-      GROUP BY 1, 2
-      HAVING count(*) >= 2
-    ),
-    sym AS (SELECT lo AS a, hi AS b FROM e UNION ALL SELECT hi, lo FROM e),
-    deg AS (SELECT a AS node, CAST(count(*) AS BIGINT) AS d
-            FROM sym GROUP BY 1),
-    iw AS (SELECT node,
-                  CAST(floor(1000000.0 / ln(d) + 0.001) AS BIGINT)
-                    AS inv_micro
-           FROM deg WHERE d >= 2 AND d <= {AA_DEG_CAP}),
-    wedge AS (
-      SELECT s1.b AS lo, s2.b AS hi, s1.a AS z
-      FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b
-    ),
-    cand AS (
-      SELECT wedge.lo, wedge.hi,
-             CAST(count(*) AS BIGINT) AS n_common,
-             CAST(sum(iw.inv_micro) AS BIGINT) AS aa_micro
-      FROM wedge JOIN iw ON iw.node = wedge.z
-      GROUP BY 1, 2
-    )
-    SELECT c.lo AS item_a, c.hi AS item_b, c.n_common, c.aa_micro,
-           round(c.aa_micro / 1000000.0, 6) AS aa_score,
-           CAST({AA_DEG_CAP} AS INT) AS deg_cap
-    FROM cand c LEFT JOIN e ON e.lo = c.lo AND e.hi = c.hi
-    WHERE e.lo IS NULL
-    ORDER BY c.aa_micro DESC, c.lo, c.hi LIMIT 20
-    """,
+    oracle=_adamic_adar_oracle(AA_DEG_CAP),
 )
 def adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hub-capped Adamic-Adar (r12, VERDICT r11 #5): identical to
@@ -1227,48 +997,16 @@ def adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is O(CAP² · |nodes|) regardless of the degree distribution;
     everything else matches the uncapped twin (one staged edge table,
     anti-join for non-edges, exact integer scores)."""
-    t = load(spark, sf_dir)
-    baskets = t.lineitem.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    b2 = baskets.select(
-        F.col("basket").alias("basket2"), F.col("item").alias("item2")
-    )
-    e = (
-        baskets.join(
-            b2,
-            (F.col("basket") == F.col("basket2"))
-            & (F.col("item") < F.col("item2")),
-        )
-        .groupBy(F.col("item").alias("lo"), F.col("item2").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_cobuys"))
-        .filter(F.col("n_cobuys") >= 2)
-        .select("lo", "hi")
-        .localCheckpoint(eager=True)
-    )
-    sym = e.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionAll(
-        e.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("d")
-    )
-    iw = deg.filter(
-        (F.col("d") >= 2) & (F.col("d") <= AA_DEG_CAP)
-    ).select(
-        "node",
-        F.expr("CAST(floor(1000000.0 / ln(d) + 0.001) AS BIGINT)").alias(
-            "inv_micro"
-        ),
-    )
+    e, sym, iw = _adamic_adar_inputs(spark, sf_dir, AA_DEG_CAP)
     # cap applied BEFORE the wedge self-join: only capped z fan out,
     # so no hub ever enters the two-path enumeration
     symc = sym.join(
         iw.select(F.col("node").alias("zok")),
-        F.col("a") == F.col("zok"),
+        F.col("src") == F.col("zok"),
         "left_semi",
     )
-    s2 = symc.select(F.col("a").alias("z2"), F.col("b").alias("hi"))
-    wedge = symc.select(F.col("a").alias("z"), F.col("b").alias("lo")).join(
+    s2 = symc.select(F.col("src").alias("z2"), F.col("dst").alias("hi"))
+    wedge = symc.select(F.col("src").alias("z"), F.col("dst").alias("lo")).join(
         s2, (F.col("z") == F.col("z2")) & (F.col("lo") < F.col("hi"))
     )
     cand = (
@@ -1279,21 +1017,6 @@ def adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("inv_micro").cast("long").alias("aa_micro"),
         )
     )
-    ex = e.select(F.col("lo").alias("elo"), F.col("hi").alias("ehi"))
-    return (
-        cand.join(
-            ex,
-            (F.col("lo") == F.col("elo")) & (F.col("hi") == F.col("ehi")),
-            "left_anti",
-        )
-        .select(
-            F.col("lo").alias("item_a"),
-            F.col("hi").alias("item_b"),
-            "n_common",
-            "aa_micro",
-            F.round(F.col("aa_micro") / 1_000_000.0, 6).alias("aa_score"),
-            F.lit(AA_DEG_CAP).cast("int").alias("deg_cap"),
-        )
-        .orderBy(F.col("aa_micro").desc(), "item_a", "item_b")
-        .limit(20)
+    return _adamic_adar_top(
+        cand, e, F.lit(AA_DEG_CAP).cast("int").alias("deg_cap")
     )

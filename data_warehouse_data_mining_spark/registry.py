@@ -74,15 +74,11 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
     fresh round-robin queue.
     """
     import json
-    import re
     from pathlib import Path
 
     last: dict[str, dict] = {}
-    last_round: dict[str, int] = {}
     root = Path(__file__).resolve().parents[1]
     for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)", path.name)
-        rnd = int(m.group(1)) if m else 0
         try:
             rows = json.loads(path.read_text())
         except (OSError, ValueError):
@@ -91,7 +87,6 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
             for name, rec in rows.items():
                 if isinstance(rec, dict):
                     last[name] = rec
-                    last_round[name] = rnd
 
     def is_red(rec: dict) -> bool:
         if rec.get("err") not in (None, "no_oracle"):
@@ -106,60 +101,6 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
     rows_only = frozenset(
         n for n, rec in last.items() if rec.get("err") == "no_oracle"
     )
-    # One-round recheck requests: names whose local test pins were
-    # materially tightened in round N, so their pre-N driver greens no
-    # longer prove the CURRENT assertion under the driver's JVM/BLAS.
-    # Pinned to the sweep front until a driver row from round >= N
-    # exists, then they expire back into the ordinary green pool —
-    # never hand-removed, never pinned forever.
-    recheck_requests = {
-        # r7 (commit ca458bd) moved these two from property pins to
-        # exact seeded confusion-cell pins; latest driver green is r6.
-        "ml_logreg_confusion": 8,
-        "ml_random_forest_report": 8,
-        # r13 optimization restructured these five queries (single
-        # token/coding pass, window-count sizes, F.expr minhash, one
-        # all-cells candidate table), but the capped sweep's
-        # green-at-latest ordering rotated every one of them OUT of
-        # driver re-verification exactly when it was rewritten
-        # (VERDICT r13 item 1): their newest driver rows predate the
-        # rewrites. Pin until a round >= 14 row exists at the
-        # post-rewrite code.
-        "dsir_importance_weights": 14,
-        "prefix_filter_jaccard_pairs": 14,
-        "ivf_pq_search": 14,
-        "dedup_minhash_lsh": 14,
-        "ivf_nprobe_recall_curve": 14,
-        # r14 optimization touched these query paths (see
-        # OPTIMIZATION_r14.md); same rule — driver row at or after the
-        # round that changed the builder.
-        "graph_pagerank": 14,
-        "ml_cv_grid_search": 14,
-        "graph_personalized_pagerank": 14,
-        "graph_kcore_peel": 14,
-        "graph_bfs_layers": 14,
-        "markov_removal_attribution": 14,
-        "bradley_terry_event_strengths": 14,
-        "ucb1_bandit_replay": 14,
-        "smote_rebalance_counts": 14,
-        "ml_smote_then_train": 14,
-        "simhash_fingerprints": 14,
-        "simhash_hamming_stats": 14,
-        "simhash128_hamming_stats": 14,
-        # shared _pq_code_udf marked non-deterministic (r14): the other
-        # three consumers beyond ivf_pq_search
-        "ann_ivf_kmeans": 14,
-        "pq_adc_search": 14,
-        "embedding_pq_quantization": 14,
-    }
-    stale = tuple(
-        sorted(
-            n
-            for n, since in recheck_requests.items()
-            if last_round.get(n, 0) < since
-        )
-    )
-    reds = reds + tuple(n for n in stale if n not in reds)
     return greens, reds, rows_only
 
 
@@ -260,6 +201,10 @@ def _ensure_loaded() -> None:
     from data_warehouse_data_mining_spark.streaming import stateful as stream_stateful  # noqa: F401
     from data_warehouse_data_mining_spark.operators import advanced  # noqa: F401
     from data_warehouse_data_mining_spark.operators import mining  # noqa: F401
+    from data_warehouse_data_mining_spark.operators import mining_stats  # noqa: F401
+    from data_warehouse_data_mining_spark.operators import mining_policy  # noqa: F401
+    from data_warehouse_data_mining_spark.operators import mining_causal  # noqa: F401
+    from data_warehouse_data_mining_spark.operators import mining_ratings  # noqa: F401
     from data_warehouse_data_mining_spark.operators import graph  # noqa: F401
     from data_warehouse_data_mining_spark.operators import sketches  # noqa: F401
     from data_warehouse_data_mining_spark.operators import quality  # noqa: F401

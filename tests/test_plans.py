@@ -198,11 +198,24 @@ def test_iterative_loops_checkpoint_truncates_lineage(spark):
     not accumulate one logical plan per iteration: localCheckpoint
     truncates the lineage, so the FINAL plan is a handful of operators
     over a checkpointed leaf, not a 10-join chain. r2's un-checkpointed
-    plans audited at 309 / 4,788 codegen operators — this pins the fix."""
-    from data_warehouse_data_mining_spark.operators.graph import graph_pagerank
+    plans audited at 309 / 4,788 codegen operators — this pins the fix.
+    The label-propagation pair pins the shared superstep loop:
+    graph_label_propagation keeps only its last superstep's two joins
+    over the lazily checkpointed labels, graph_modularity only its six
+    scoring joins over the checkpointed labels."""
+    from data_warehouse_data_mining_spark.operators.graph import (
+        graph_label_propagation,
+        graph_modularity,
+        graph_pagerank,
+    )
     from data_warehouse_data_mining_spark.operators.dedup import neardup_clusters
 
-    for builder, max_joins in [(graph_pagerank, 2), (neardup_clusters, 2)]:
+    for builder, max_joins in [
+        (graph_pagerank, 2),
+        (neardup_clusters, 2),
+        (graph_label_propagation, 2),
+        (graph_modularity, 6),
+    ]:
         df = builder(spark, SF_SMALL)
         plan = df._jdf.queryExecution().analyzed().toString()
         n_joins = plan.count("Join ")
@@ -536,10 +549,13 @@ def test_no_broadcast_hints_on_unbounded_tables():
         "    x.join(F.broadcast(q), c)  # broadcast-ok: 5-row query set\n"
         "def dim_ok(t):\n"
         "    x.join(F.broadcast(t.nation), 'k')\n"  # bounded dim: no flag
+        "def edge_helper(spark, d):\n"
+        "    e = _contrib_edges(spark, d)\n"
+        "    x.join(F.broadcast(e), 'k')\n"  # flag: lineitem-pair-sized
     )
     tree = ast.parse(control_src)
     hits, waived = scope_broadcast_violations(tree, control_src.splitlines())
-    assert hits == [2, 5], f"lint self-test broke: {hits}"
+    assert hits == [2, 5, 19], f"lint self-test broke: {hits}"
     assert [w[1] for w in waived] == ["5-row query set"]
 
     pkg_root = os.path.dirname(os.path.abspath(pkg.__file__))

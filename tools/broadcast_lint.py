@@ -44,7 +44,9 @@ UNBOUNDED_TABLES = {
 }
 
 # helpers whose RESULT is corpus/token-proportional by construction
-TAINTED_HELPERS = {"shingle_table"}
+# (_contrib_edges: the supplier↔part edge table, one row per distinct
+# lineitem (supplier, part) pair in each direction)
+TAINTED_HELPERS = {"shingle_table", "_contrib_edges"}
 
 # grouping keys that keep an aggregate entity-proportional: one output
 # row per document / user / order / part / supplier / embedding. A
