@@ -90,8 +90,9 @@ def _prior_mins(sf_label: str) -> dict[str, float]:
     dedup_minhash/dsir/tfidf), so without the guard the 8-core mins
     (dsir 0.83, dedup_minhash 0.871) became unreachable "best priors"
     for every 32-core run and the gate flagged permanent false
-    regressions. Records whose wrapper lacks a cpus field (this
-    bench's own stdout line has none) are assumed comparable; old
+    regressions. The bench's own last stdout line carries "cpus" too,
+    so a record saved straight from stdout is self-describing; only
+    legacy records with neither field are assumed comparable, and old
     numbers stay in the BENCH_r* history untouched."""
     import glob
 
@@ -102,12 +103,13 @@ def _prior_mins(sf_label: str) -> dict[str, float]:
                 rec = json.load(f)
         except (OSError, json.JSONDecodeError):
             continue
-        rec_cpus = rec.get("cpus")
-        if rec_cpus is not None and str(rec_cpus) != str(CPUS):
-            continue
+        wrapper_cpus = rec.get("cpus")
         # the external driver records bench output wrapped under "parsed"
         if isinstance(rec.get("parsed"), dict):
             rec = rec["parsed"]
+        rec_cpus = wrapper_cpus if wrapper_cpus is not None else rec.get("cpus")
+        if rec_cpus is not None and str(rec_cpus) != str(CPUS):
+            continue
         if str(rec.get("sf")) != sf_label:
             continue
         # strictly min-vs-min: rounds predating "queries_min" recorded
@@ -265,6 +267,7 @@ def main() -> None:
                 "queries_min": timings_min,
                 "cotenancy_noise_median_spread": noise,
                 "busy_at_start": preflight["busy_at_start"],
+                "cpus": int(CPUS) if CPUS.isdigit() else CPUS,
                 "sf": float(sf_label) if sf_label.replace(".", "").isdigit() else sf_label,
             }
         )

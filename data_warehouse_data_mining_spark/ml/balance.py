@@ -32,10 +32,14 @@ distribution — the property that keeps this runnable at 100 TB.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from data_warehouse_data_mining_spark.session import local_frame
 
 SEED = 42
 N_PLANES = 4  # 16 LSH buckets
@@ -72,62 +76,61 @@ def _refine_buckets(
 ) -> DataFrame:
     """Assign each row the shallowest LSH-prefix bucket under the cap.
 
-    One ``max_planes``-bit code per row, then a per-level count
-    (aggregates over the minority class only — tiny next to the fact
-    data) broadcast back; a chained CASE picks the first level whose
-    bucket fits. Buckets still over the cap at full depth cannot be
-    split by geometry (identical sign patterns), so they are split by
-    in-bucket row number (deterministic: ordered by id) into exact
-    cap-sized slices — locality is already exhausted there, and the
-    cap must hold; the extra window shuffle touches only the minority
-    class.
+    One ``max_planes``-bit code per row, counted per full code in one
+    Spark job. That count table is literal-bounded (at most
+    2^max_planes rows), so it is collected and every code's bucket is
+    picked on the driver: a level's prefix count is the sum of the
+    full-code counts sharing that prefix, and the first (shallowest)
+    level whose count fits the cap wins. The rows then join one
+    broadcast ``(code, bucket)`` local frame.
+
+    Codes still over the cap at full depth cannot be split by geometry
+    (identical sign patterns), so their rows are split by in-bucket
+    row number (deterministic: ordered by id) into exact cap-sized
+    slices — locality is already exhausted there, and the cap must
+    hold. That window shuffle is planned only when such a code exists,
+    and it touches only the minority class.
     """
     coded = minority.withColumn(
         "code", _lsh_code(max_planes, seed)(F.col("v"))
     )
-    # ONE counting pass over the minority (r14, guide §2.3 "aggregate
-    # before you shuffle"): exact counts per FULL max_planes-bit code —
-    # a ≤ 2^max_planes-row literal-bounded table, checkpointed once.
-    # Every per-level count then re-aggregates this tiny table (the
-    # level counts are exact sums of full-code counts sharing the
-    # prefix). The former shape re-derived `coded` — a minority scan
-    # plus the Arrow LSH pass — once per level for its count aggregate:
-    # 6 passes total, 2 now (counts + the final projection); measured
-    # 5-7 s -> sub-second at sf0.01 with byte-identical buckets.
-    code_counts = (
-        coded.groupBy("code")
-        .agg(F.count(F.lit(1)).alias("cn"))
-        .localCheckpoint(eager=True)
-    )
+    code_counts = {
+        r["code"]: r["cn"]
+        for r in coded.groupBy("code").agg(F.count(F.lit(1)).alias("cn")).collect()
+    }
     levels = list(range(N_PLANES, max_planes + 1, 2))
-    for lv in levels:
-        mask = (1 << lv) - 1
-        counts = (
-            code_counts.groupBy(
-                (F.col("code").bitwiseAND(mask)).alias(f"p{lv}")
-            )
-            .agg(F.sum("cn").cast("long").alias(f"n{lv}"))
-        )
-        coded = coded.withColumn(f"p{lv}", F.col("code").bitwiseAND(mask)).join(
-            F.broadcast(counts), f"p{lv}"
-        )
-    # first (shallowest) level under the cap wins; level tag keeps
-    # prefixes from different depths in distinct buckets
-    bucket = None
-    for lv in levels:
-        fits = F.col(f"n{lv}") <= bucket_cap
-        tagged = F.col(f"p{lv}") + F.lit(lv << 24)
-        bucket = F.when(fits, tagged) if bucket is None else bucket.when(fits, tagged)
-    deepest = levels[-1]
-    from pyspark.sql import Window as W
+    level_counts = {lv: Counter() for lv in levels}
+    for code, cn in code_counts.items():
+        for lv in levels:
+            level_counts[lv][code & ((1 << lv) - 1)] += cn
 
-    rn = F.row_number().over(W.partitionBy(f"p{deepest}").orderBy("id"))
-    salt = ((rn - 1) / F.lit(bucket_cap)).cast("long")
-    bucket = bucket.otherwise(
-        F.col(f"p{deepest}") + F.lit((deepest + 1) << 24) + salt * F.lit(1 << 16)
+    def pick(code: int):
+        # level tag keeps prefixes from different depths in distinct
+        # buckets; None marks a code that overflows at full depth
+        for lv in levels:
+            prefix = code & ((1 << lv) - 1)
+            if level_counts[lv][prefix] <= bucket_cap:
+                return prefix + (lv << 24)
+        return None
+
+    buckets = [(code, pick(code)) for code in code_counts]
+    mapping = local_frame(
+        minority.sparkSession, buckets, "code bigint, bucket bigint"
     )
-    keep = ["id", "v"]
-    return coded.select(*keep, bucket.alias("bucket"))
+    # left, not inner: every counted code is in the map, and an inner
+    # join's inferred isnotnull(code) filter would evaluate the LSH UDF
+    # a second time below the join
+    coded = coded.join(F.broadcast(mapping), "code", "left")
+    bucket = F.col("bucket")
+    if any(b is None for _, b in buckets):
+        deepest = levels[-1]
+        prefix = F.col("code").bitwiseAND((1 << deepest) - 1)
+        rn = F.row_number().over(Window.partitionBy(prefix).orderBy("id"))
+        salt = ((rn - 1) / F.lit(bucket_cap)).cast("long")
+        bucket = F.coalesce(
+            bucket, prefix + F.lit((deepest + 1) << 24) + salt * F.lit(1 << 16)
+        )
+    return coded.select("id", "v", bucket.alias("bucket"))
 
 
 def smote(

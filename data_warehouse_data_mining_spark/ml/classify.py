@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.ml.classification import (
     DecisionTreeClassifier,
@@ -64,8 +65,8 @@ def param_grid(name: str, clf):
 @dataclass
 class EvalResult:
     name: str
-    auc: float
     predictions: DataFrame
+    label_col: str = "label"
     # CV only: the winning grid point, {param_name: value} — lets
     # callers property-pin the selection (grid membership) without
     # reaching into the model object.
@@ -73,6 +74,28 @@ class EvalResult:
     # CV only: one mean-CV metric per fitted grid point — callers pin
     # len(avg_metrics) == grid size (the CV really swept the grid).
     avg_metrics: list[float] | None = None
+
+    @cached_property
+    def auc(self) -> float:
+        """areaUnderROC of the test predictions, evaluated on first
+        read: a caller that only wants the predictions pays no
+        evaluator jobs."""
+        evaluator = BinaryClassificationEvaluator(labelCol=self.label_col)
+        return float(evaluator.evaluate(self.predictions))
+
+
+def _cv_parallelism(n_maps: int, cores: int) -> int:
+    """``SPARK_GRAFT_CV_PARALLELISM`` when set (clamped to >= 1), else
+    the grid size capped at the session's core count."""
+    raw = os.environ.get("SPARK_GRAFT_CV_PARALLELISM", "").strip()
+    if not raw:
+        return max(1, min(n_maps, cores))
+    try:
+        return max(1, int(raw))
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CV_PARALLELISM must be an integer, got {raw!r}"
+        ) from None
 
 
 def train_evaluate(
@@ -83,12 +106,11 @@ def train_evaluate(
     label_col: str = "label",
 ) -> EvalResult:
     """fit(train) → transform(test) → areaUnderROC (reference:
-    stroke_predict.py:155-173)."""
+    stroke_predict.py:155-173); the AUC is computed when ``.auc`` is
+    first read."""
     clf = make_classifier(name, features_col, label_col)
     model = clf.fit(train)
-    predictions = model.transform(test)
-    evaluator = BinaryClassificationEvaluator(labelCol=label_col)
-    return EvalResult(name, float(evaluator.evaluate(predictions)), predictions)
+    return EvalResult(name, model.transform(test), label_col)
 
 
 def cross_validate(
@@ -112,10 +134,9 @@ def cross_validate(
     # (CV parallelizes within a fold) and at the session's core count
     # so a small local[N] run isn't oversubscribed; overridable for
     # cluster runs where executor count != defaultParallelism.
-    cores = train.sparkSession.sparkContext.defaultParallelism
-    parallelism = int(
-        os.environ.get("SPARK_GRAFT_CV_PARALLELISM", 0)
-    ) or max(1, min(len(maps), cores))
+    parallelism = _cv_parallelism(
+        len(maps), train.sparkSession.sparkContext.defaultParallelism
+    )
     cv = CrossValidator(
         estimator=clf,
         estimatorParamMaps=maps,
@@ -134,11 +155,10 @@ def cross_validate(
     pick = max if evaluator.isLargerBetter() else min
     win = grid_maps[int(pick(range(len(model.avgMetrics)),
                              key=model.avgMetrics.__getitem__))]
-    predictions = best.transform(test)
     return EvalResult(
         name,
-        float(evaluator.evaluate(predictions)),
-        predictions,
+        best.transform(test),
+        label_col,
         best_params={p.name: v for p, v in win.items()},
         avg_metrics=[float(m) for m in model.avgMetrics],
     )

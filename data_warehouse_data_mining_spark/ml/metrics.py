@@ -1,10 +1,11 @@
-"""Distributed classification metrics.
+"""Classification metrics over a k×k confusion matrix.
 
 The reference collects predictions to the driver and calls
 sklearn.metrics (stroke_predict.py:159-169) — the whole test set lands
-in driver memory. Here the confusion matrix is a groupBy aggregate and
-the classification report is derived from it, so metrics cost one
-shuffle regardless of data size.
+in driver memory. Here the confusion matrix is a groupBy aggregate, and
+only its k² cells reach the driver: the classification report is
+finished there in Python and returned as a JVM-local frame. That is one
+Spark job regardless of data size, and the result is a LocalTableScan.
 
 sklearn parity notes: macro-average over the label set present in
 (labels ∪ predictions); ``zero_division=1`` semantics (reference uses
@@ -15,8 +16,14 @@ precision (recall) of 1.0.
 
 from __future__ import annotations
 
+from collections import Counter
+from functools import reduce
+from operator import add
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_warehouse_data_mining_spark.session import local_frame
 
 
 def confusion_matrix(
@@ -38,79 +45,60 @@ def classification_report(
     pred_col: str = "prediction",
     zero_division: float = 1.0,
 ) -> DataFrame:
-    """Per-class precision/recall/F1 + support, plus accuracy and macro
-    rows — entirely from the confusion-matrix aggregate."""
-    cm = confusion_matrix(predictions, label_col, pred_col)
+    """Per-class precision/recall/F1 + support, plus macro and accuracy
+    rows, from one collect of the confusion matrix.
 
-    classes = cm.select(F.col("label").alias("cls")).union(
-        cm.select(F.col("prediction").alias("cls"))
-    ).distinct()
+    The doubles follow the IEEE operation order of the SQL form of the
+    same report: ``tp/n_pred``, ``tp/support``, ``2*p*r/(p+r)`` and a
+    left-to-right ``sum/k`` for the macro average, so they are
+    bit-identical to it. A null class never matches itself (SQL join
+    semantics): its tp, support and n_pred are 0."""
+    cells = [
+        (r["label"], r["prediction"], r["n"])
+        for r in confusion_matrix(predictions, label_col, pred_col).collect()
+    ]
+    tp, support, n_pred = Counter(), Counter(), Counter()
+    for label, pred, n in cells:
+        if label is not None:
+            support[label] += n
+            if label == pred:
+                tp[label] = n
+        if pred is not None:
+            n_pred[pred] += n
+    classes = {c for label, pred, _ in cells for c in (label, pred)}
 
-    tp = cm.filter(F.col("label") == F.col("prediction")).select(
-        F.col("label").alias("cls"), F.col("n").alias("tp")
-    )
-    actual = cm.groupBy(F.col("label").alias("cls")).agg(F.sum("n").alias("support"))
-    predicted = cm.groupBy(F.col("prediction").alias("cls")).agg(
-        F.sum("n").alias("n_pred")
-    )
+    zd = float(zero_division)
+    rows = []
+    for c in sorted(classes, key=lambda c: (c is None, c or 0.0)):
+        t, s, m = tp[c], support[c], n_pred[c]
+        p = t / m if m > 0 else zd
+        r = t / s if s > 0 else zd
+        f1 = 2 * p * r / (p + r) if p + r > 0 else 0.0
+        rows.append((c, None, p, r, f1, s))
 
-    zd = F.lit(float(zero_division))
-    per_class = (
-        classes.join(tp, "cls", "left")
-        .join(actual, "cls", "left")
-        .join(predicted, "cls", "left")
-        .fillna(0, subset=["tp", "support", "n_pred"])
-        .select(
-            "cls",
-            F.when(F.col("n_pred") > 0, F.col("tp") / F.col("n_pred"))
-            .otherwise(zd)
-            .alias("precision"),
-            F.when(F.col("support") > 0, F.col("tp") / F.col("support"))
-            .otherwise(zd)
-            .alias("recall"),
-            "support",
-        )
-        .select(
-            "cls",
-            "precision",
-            "recall",
-            F.when(
-                (F.col("precision") + F.col("recall")) > 0,
-                2 * F.col("precision") * F.col("recall")
-                / (F.col("precision") + F.col("recall")),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("f1"),
-            "support",
-        )
-    )
+    if rows:
+        # reduce(add), not sum(): builtin sum() of floats is compensated
+        # on newer Pythons, which would break the left-to-right order
+        cols = list(zip(*rows))
+        means = [reduce(add, col, 0.0) / len(rows) for col in cols[2:5]]
+        macro = (None, "macro avg", *means, sum(cols[5]))
+    else:
+        macro = (None, "macro avg", None, None, None, None)
+    total = sum(n for _, _, n in cells)
+    correct = sum(tp.values())
+    accuracy = (None, "accuracy", correct / total if total else 0.0, None, None, total)
 
-    total = predictions.count()
-    correct = predictions.filter(
-        F.col(label_col).cast("double") == F.col(pred_col).cast("double")
-    ).count()
-
-    summary = per_class.agg(
-        F.avg("precision").alias("precision"),
-        F.avg("recall").alias("recall"),
-        F.avg("f1").alias("f1"),
-        F.sum("support").alias("support"),
-    ).select(F.lit("macro avg").alias("class"), "precision", "recall", "f1", "support")
-
-    accuracy_row = per_class.sparkSession.createDataFrame(
-        [("accuracy", float(correct) / total if total else 0.0, None, None, total)],
-        "class string, precision double, recall double, f1 double, support bigint",
-    )
-
-    return (
-        per_class.select(
-            F.col("cls").cast("string").alias("class"),
-            "precision",
-            "recall",
-            "f1",
-            F.col("support").cast("bigint").alias("support"),
-        )
-        .unionByName(summary.select("class", "precision", "recall", "f1",
-                                    F.col("support").cast("bigint").alias("support")))
-        .unionByName(accuracy_row)
+    # the class label is cast to string in Spark, so it prints exactly
+    # as a Spark double does; the projection folds into the local scan
+    return local_frame(
+        predictions.sparkSession,
+        rows + [macro, accuracy],
+        "cls double, name string, precision double, recall double, "
+        "f1 double, support bigint",
+    ).select(
+        F.coalesce(F.col("cls").cast("string"), F.col("name")).alias("class"),
+        "precision",
+        "recall",
+        "f1",
+        "support",
     )

@@ -18,6 +18,7 @@ from data_warehouse_data_mining_spark.catalog import load
 from data_warehouse_data_mining_spark.functions import vectors as V
 from data_warehouse_data_mining_spark.ml import balance, classify, metrics
 from data_warehouse_data_mining_spark.registry import register
+from data_warehouse_data_mining_spark.session import local_frame
 
 SEED = 42
 
@@ -85,9 +86,10 @@ def ml_logreg_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     train, test = data.randomSplit([0.7, 0.3], seed=SEED)
     result = classify.train_evaluate("logistic_regression", train, test)
     cm = metrics.confusion_matrix(result.predictions)
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(a, b) for a in (0.0, 1.0) for b in (0.0, 1.0)],
-        ["label", "prediction"],
+        "label double, prediction double",
     )
     # FULL outer, not left: a stray non-binary label/prediction class
     # must surface as a visible 5th row carrying its actual class
@@ -159,9 +161,11 @@ def ml_logreg_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ml_random_forest_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RandomForest (the reference script's active classifier,
-    stroke_predict.py:144-146) + distributed classification report with
-    sklearn zero_division=1 parity (ml/metrics.py), returning the
-    ACTUAL report rows.
+    stroke_predict.py:144-146) + classification report with sklearn
+    zero_division=1 parity (ml/metrics.py), returning the ACTUAL report
+    rows. Only the k×k confusion matrix is aggregated in Spark; the
+    report is finished on the driver and returned as a local frame, and
+    the forest's AUC is never evaluated (nothing here reads it).
 
     Exact-oracle-checked as a VALUE pin (r7 tightening of the r5
     property pin): the seeded forest on this fixed corpus is
@@ -171,7 +175,7 @@ def ml_random_forest_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     RF confusion-matrix integers per corpus fingerprint
     (count, sum(label) — disambiguates the two 500-row corpora) and
     DERIVES precision/recall/f1/macro/accuracy with the exact IEEE
-    arithmetic metrics.classification_report uses (BIGINT/BIGINT →
+    arithmetic metrics.classification_report uses (integer/integer →
     double division, 2·p·r/(p+r) in the same association order,
     macro = sum/2), so the doubles are bit-identical, not approximate.
     An unknown corpus joins to zero pin rows and fails LOUDLY.
@@ -248,7 +252,8 @@ def ml_five_classifiers_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 int(result.predictions.count() == test.count()),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "classifier string, n_rows_total bigint, "
         "auc_in_unit_interval int, predictions_cover_test int",
@@ -434,7 +439,8 @@ def ml_weighted_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).fit(train)
     auc_u = float(evaluator.evaluate(plain.transform(test)))
     auc_w = float(evaluator.evaluate(wtd.transform(test)))
-    rows = spark.createDataFrame(
+    rows = local_frame(
+        spark,
         [
             ("class_weighted", n_total, int(0.0 <= auc_w <= 1.0)),
             ("unweighted", n_total, int(0.0 <= auc_u <= 1.0)),
@@ -483,7 +489,8 @@ def ml_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("features", array_to_vector(F.col("v")))
     model = KMeans(k=8, seed=SEED, featuresCol="features", predictionCol="cluster").fit(e)
     assigned = model.transform(e).select("vec_id", "v", "cluster")
-    centers = spark.createDataFrame(
+    centers = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "c_id int, center array<double>",
     )
@@ -582,7 +589,8 @@ def ml_regression_family(spark: SparkSession, sf_dir: str) -> DataFrame:
                 int(pred.count() == n_test),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "model string, n_rows_total bigint, rmse_nonnegative int, "
         "r2_at_most_1 int, predictions_cover_test int",
@@ -734,7 +742,8 @@ def ml_smote_then_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         auc = float(evaluator.evaluate(model.transform(test)))
         rows.append((variant, n_total, int(0.0 <= auc <= 1.0)))
     return (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             rows, "variant string, n_rows_total bigint, auc_in_unit_interval int"
         )
         .crossJoin(F.broadcast(growth_ok))

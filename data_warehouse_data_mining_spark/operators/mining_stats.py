@@ -19,6 +19,7 @@ from data_warehouse_data_mining_spark.operators.mining_common import (
     _EV_CENTS,
 )
 from data_warehouse_data_mining_spark.registry import register
+from data_warehouse_data_mining_spark.session import local_frame
 
 _NEYMAN_BUDGET = 1000
 
@@ -2456,7 +2457,8 @@ def ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = terms.withColumn(
         "cum_micro", F.sum("t_micro").over(wcum).cast("long")
     )
-    crit = spark.createDataFrame(
+    crit = local_frame(
+        spark,
         [(i + 1, c) for i, c in enumerate(LB_CHI2_95)], "df long, crit double"
     )
     qexpr = F.col("n") * (F.col("n") + 2) * F.col("cum_micro") / 1e12
@@ -3055,7 +3057,8 @@ def kruskal_wallis_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1.0 - CAST(t3t AS DOUBLE)"
         " / (CAST(nn AS DOUBLE) * nn * nn - nn) AS tie_corr",
     )
-    crit = spark.createDataFrame(
+    crit = local_frame(
+        spark,
         [(i + 1, c) for i, c in enumerate(KW_CHI2_95)],
         "df long, crit double",
     )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from data_warehouse_data_mining_spark.catalog import load
 from data_warehouse_data_mining_spark.functions import vectors as V
 from data_warehouse_data_mining_spark.registry import register
+from data_warehouse_data_mining_spark.session import local_frame
 
 DIM = 64
 N_PLANES = 8
@@ -294,7 +295,8 @@ def _exact_top(spark: SparkSession, sf_dir: str, metric: str = "cos") -> DataFra
         _YARDSTICK_CACHE[key] = [
             (r["q_id"], r["neighbor_id"], r["rn"]) for r in df.collect()
         ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _YARDSTICK_CACHE[key], "q_id bigint, neighbor_id bigint, rn int"
     )
 
@@ -577,7 +579,8 @@ def _ivf_neighbors(
         F.element_at(_pq_code_udf([], DIM, coarse=coarse)(F.col("v")), 1),
     )
 
-    centers = spark.createDataFrame(
+    centers = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(coarse)],
         "center_cell int, center array<double>",
     )
@@ -626,7 +629,8 @@ def _ivf_candidates_all_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell",
         F.element_at(_pq_code_udf([], DIM, coarse=coarse)(F.col("v")), 1),
     )
-    centers = spark.createDataFrame(
+    centers = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(coarse)],
         "center_cell int, center array<double>",
     )
@@ -1896,7 +1900,8 @@ def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-scanned the query filter — 8 pushed-down scans where 1 does),
     # then one broadcast join against the stacked codebook table builds
     # the whole (query, subspace, code) LUT.
-    centers_all = spark.createDataFrame(
+    centers_all = local_frame(
+        spark,
         [(m, i, c) for m in range(ADC_M) for i, c in enumerate(cb[m])],
         "m int, code int, center array<double>",
     )
@@ -2054,7 +2059,8 @@ def ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
-    centers = spark.createDataFrame(
+    centers = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(coarse)],
         "center_cell int, center array<double>",
     )

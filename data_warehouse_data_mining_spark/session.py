@@ -14,13 +14,18 @@ correct on local[N]:
 * Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (naive-UTC) exactly.
 * Arrow enabled for all pandas interchange (Pandas UDFs, toPandas).
+
+``local_frame`` is the one way the package turns driver-side rows into
+a DataFrame: an Arrow table handed to the JVM plans as a
+``LocalTableScan``, where ``createDataFrame(list)`` runs a Python-RDD
+job for every frame it makes.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -82,3 +87,28 @@ def _parse_local_threads(master: str) -> int | None:
         except ValueError:
             return None
     return None
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A JVM-local DataFrame of driver-side ``rows`` (tuples in the
+    column order of the DDL ``schema``).
+
+    The rows go through a ``pyarrow.Table``, so the frame plans as a
+    ``LocalTableScan`` and starts no job of its own. Values keep their
+    identity: float NaN stays NaN and None becomes null, in every
+    column type, ``array<double>`` included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=field.type)
+            for i, field in enumerate(arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)

@@ -258,12 +258,11 @@ def test_bounded_model_recurrences_run_in_one_task(spark):
 
 
 def test_smote_bucket_refinement_single_coding_pass(spark):
-    """r14 optimization pin: smote's bucket refinement derives every
-    per-level count from ONE checkpointed full-code count table — the
-    coded minority (scan + Arrow LSH pass) is evaluated at most twice
-    in the final plan (the counting pass is materialized at build, so
-    the remaining ArrowEvalPython nodes are the final projection's),
-    never once per refinement level (6 passes pre-r14; the static plan
+    """smote's bucket refinement codes the minority (scan + Arrow LSH
+    pass) once in the final plan: the full-code count table is
+    collected at build and each code's bucket is picked on the driver,
+    so the only ArrowEvalPython node left is the final projection's —
+    never one per refinement level (6 passes pre-r14; the static plan
     held 128 ArrowEvalPython nodes)."""
     from data_warehouse_data_mining_spark.ml.queries import (
         smote_rebalance_counts,
@@ -275,7 +274,32 @@ def test_smote_bucket_refinement_single_coding_pass(spark):
     # count operator-detail entries ("(n) ArrowEvalPython"), not the
     # tree rendering, which lists every node a second time
     n = len(re.findall(r"\(\d+\) ArrowEvalPython", plan))
-    assert n <= 2, f"smote plan re-derives the coded minority: {n} Arrow nodes"
+    assert n <= 1, f"smote plan re-derives the coded minority: {n} Arrow nodes"
+
+
+def test_ml_ops_exec_job_counts(spark):
+    """Spark jobs the sink action of two ML ops runs, counted with
+    statusTracker under a job group. The classification report is
+    finished on the driver (one LocalTableScan write: 1 job, was 12 as
+    per-class joins and count() jobs), and SMOTE joins one broadcast
+    (code, bucket) local frame (5 jobs at local[8]/8 partitions, was 15
+    with a broadcast join per refinement level; one job of slack for
+    AQE stage splits)."""
+    from data_warehouse_data_mining_spark.registry import all_queries
+
+    sc = spark.sparkContext
+    qs = all_queries()
+    for name, limit in [("ml_random_forest_report", 1), ("smote_rebalance_counts", 6)]:
+        df = qs[name].builder(spark, SF_SMALL)
+        group = f"test_plans:{name}:exec"
+        sc.setJobGroup(group, group)
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 1 <= n <= limit, f"{name}: {n} exec jobs (limit {limit})"
 
 
 def test_aqe_skew_join_split(spark):
@@ -581,3 +605,64 @@ def test_no_broadcast_hints_on_unbounded_tables():
         # onto the corpus
         ("similarity.py", "qv2 is bounded by N_QUERIES (literal id filter)"),
     ], f"waiver inventory drifted: {sorted(waivers)}"
+
+
+def _create_dataframe_calls(src: str, allowed_in=()):
+    """Line numbers of ``createDataFrame(...)`` calls in ``src`` outside
+    the functions named in ``allowed_in``."""
+    import ast
+
+    tree = ast.parse(src)
+    allowed = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and node.name in allowed_in:
+            allowed.update(id(n) for n in ast.walk(node))
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and id(node) not in allowed
+        and (
+            (isinstance(node.func, ast.Attribute) and node.func.attr == "createDataFrame")
+            or (isinstance(node.func, ast.Name) and node.func.id == "createDataFrame")
+        )
+    ]
+
+
+def test_small_frames_go_through_local_frame():
+    """Repo-wide AST lint: driver-side rows become a DataFrame only
+    through ``session.local_frame``, which plans as a LocalTableScan.
+    ``createDataFrame(list)`` runs a Python-RDD job per frame, so a
+    direct call anywhere else in the package fails here."""
+    import os
+
+    import data_warehouse_data_mining_spark as pkg
+
+    # lint self-test: positive and negative controls
+    control_src = (
+        "def local_frame(spark, rows, schema):\n"
+        "    return spark.createDataFrame(table, struct)\n"  # the helper
+        "def builder(spark):\n"
+        "    a = spark.createDataFrame([(1,)], 'x int')\n"  # flag
+        "    b = df.sparkSession.createDataFrame(rows)\n"  # flag
+        "    c = local_frame(spark, [(1,)], 'x int')\n"
+    )
+    assert _create_dataframe_calls(control_src, {"local_frame"}) == [4, 5]
+
+    pkg_root = os.path.dirname(os.path.abspath(pkg.__file__))
+    hits = []
+    for root, _, files in os.walk(pkg_root):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                src = fh.read()
+            allowed = {"local_frame"} if path.endswith(
+                os.path.join("data_warehouse_data_mining_spark", "session.py")
+            ) else set()
+            hits += [
+                f"{os.path.relpath(path, pkg_root)}:{line}"
+                for line in _create_dataframe_calls(src, allowed)
+            ]
+    assert not hits, f"createDataFrame outside session.local_frame: {hits}"

@@ -11,7 +11,9 @@ Checks (all static/AST or sub-minute — no registry bind, no Spark):
   3. coverage_state      — COVERAGE.md state block matches the registry
   4. registry integrity  — every query has an oracle; imports clean
   5. docs/lint pytest    — tests/test_docs.py + the AST-level plan
-                           lints (the subset that needs no Spark bind)
+                           lints (the subset that needs no Spark bind),
+                           including the one-way-to-make-a-small-frame
+                           lint (createDataFrame only in local_frame)
   6. git cleanliness     — warns (not fails) on uncommitted changes so
                            "green at HEAD" means the actual HEAD
 
@@ -80,6 +82,8 @@ def _pytest_fast():
             + "::test_no_pins_on_token_proportional_tables",
             os.path.join(REPO, "tests", "test_plans.py")
             + "::test_no_broadcast_hints_on_unbounded_tables",
+            os.path.join(REPO, "tests", "test_plans.py")
+            + "::test_small_frames_go_through_local_frame",
             "-p", "no:cacheprovider",
         ],
         capture_output=True, text=True, cwd=REPO,
